@@ -6,9 +6,11 @@ curation pass (``curate.Curate``: the corpus_clean composition, the
 survivor sink and minhash LSH candidates), one package call per step.
 
 Classes: a = one non-empty ``etl_increment`` page, b = one ``etl_full``
-call, c = one curation pass. Throughput is documents per second over every
-call of the window: documents written by the ingest calls plus input
-documents of the curation passes, over the seconds those calls took.
+call, c = one curation pass, d = one keyset loop with its compaction (every
+``etl_increment`` call of a cycle plus ``compact_sink``). Throughput is
+documents per second over every call of the window: documents written by
+the ingest calls plus input documents of the curation passes, over the
+seconds those calls took.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ class Batch:
         self.ingest = Ingest(spark, tracer, work, seed, spec["ingest"])
         self.curate = Curate(spark, tracer, work, seed, spec["curate"])
         self.curate_next = False  # a keyset loop just compacted
+        self.cycles = self.k = 0  # whole cycles run, steps into this one
         self.tracer = tracer
 
     @property
@@ -50,21 +53,22 @@ class Batch:
         self.curate.warm_up()
 
     def step(self) -> tuple[int, int]:
+        self.k += 1
         if self.curate_next:
             self.curate_next = False
+            self.cycles, self.k = self.cycles + 1, 0
             return self.curate.step()
         out = self.ingest.step()
         self.curate_next = self.ingest.next_call == "etl_full"
         return out
 
-    def at_boundary(self) -> bool:
-        """A new cycle starts with the next step."""
-        return not self.curate_next and self.ingest.next_call == "etl_full"
+    def position(self) -> tuple[int, int]:
+        """(whole cycles run, steps run in the current cycle)."""
+        return self.cycles, self.k
 
     def ready(self) -> bool:
-        """A cycle just ended and this tracer has seen one whole, so every
-        run measures whole cycles."""
-        return self.at_boundary() and bool(self.curate.pass_times())
+        """This tracer has run a curation pass and a compaction."""
+        return bool(self.curate.pass_times()) and bool(self.tracer.select("compact_sink"))
 
     def check(self) -> list[str]:
         return self.ingest.check() + self.curate.check()
@@ -73,26 +77,31 @@ class Batch:
     def errors(self) -> list[str]:
         return self.ingest.errors
 
-    def units(self) -> int:
-        return len(self.tracer.select("etl_full"))
+    def ops(self) -> int:
+        """Cycles' worth of calls this tracer ran: its curation passes (in a
+        traced run, two cycles give each tracer one cycle's calls)."""
+        return len(self.curate.pass_times())
 
     def end_to_end(self) -> dict:
         t = self.tracer
         pages = t.times("etl_increment", empty=False)
         full = t.times("etl_full")
         passes = self.curate.pass_times()
+        loops = self.ingest.loop_times()
         calls = self.ingest.calls()
         docs = sum(s.attrs["docs"] for s in calls) + self.curate.n_docs * len(passes)
         seconds = sum(s.seconds for s in calls) + sum(passes)
         detail = self.ingest.detail()
         detail["curate_docs_per_s"] = self.curate.n_docs / harness.median(passes)
         detail["samples_ms"] = {k: [round(x * 1e3, 1) for x in v]
-                                for k, v in (("a", pages), ("b", full), ("c", passes))}
+                                for k, v in (("a", pages), ("b", full), ("c", passes),
+                                             ("d", loops))}
         metrics = {
             "throughput_per_s": docs / seconds,
             "a_p50_ms": harness.median(pages) * 1e3,
             "b_p50_ms": harness.median(full) * 1e3,
             "c_p50_ms": harness.median(passes) * 1e3,
+            "d_p50_ms": harness.median(loops) * 1e3,
         }
         return {"metrics": metrics, "detail": detail}
 

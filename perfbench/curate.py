@@ -80,9 +80,8 @@ class Curate:
             write_documents(survivors, self.sink, id_col="doc_id")
         with t.span("minhash_lsh_candidates"):
             cands = D.minhash_lsh_candidates(cleanex).select("id_a", "id_b").collect()
-        if t.enabled and t.phase == "measure" and not self.pairs:
-            self.pairs = {(r[0], r[1]) for r in pairs.select("id_a", "id_b").collect()}
         self.candidates = [(r[0], r[1]) for r in cands]
+        self.last_pairs = pairs
 
     def step(self) -> tuple[int, int]:
         """One measured pass. Returns (calls attempted, failed)."""
@@ -91,7 +90,9 @@ class Curate:
 
     def check(self) -> list[str]:
         """Survivors equal the ``corpus_clean`` DuckDB oracle on the same
-        input; LSH candidate pairs are ordered (id_a < id_b)."""
+        input; LSH candidate pairs are ordered (id_a < id_b). Also collects
+        the last pass's exact Jaccard pairs for the LSH precision."""
+        self.pairs = {(r[0], r[1]) for r in self.last_pairs.select("id_a", "id_b").collect()}
         con = duckdb.connect()
         try:
             con.execute(f"CREATE VIEW documents AS SELECT * FROM "

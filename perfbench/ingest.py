@@ -123,8 +123,7 @@ class Ingest:
         else:
             with t.span("compact_sink") as sp:
                 n = compact_sink(self.spark, self.inc)
-            sp.attrs.update(docs=n, pages=self.loop_pages,
-                            loop=(self.loop_docs, self.loop_s + sp.seconds))
+            sp.attrs.update(docs=n, pages=self.loop_pages, loop_s=self.loop_s + sp.seconds)
             if n != self.n_docs or self.loop_docs != self.n_orders:
                 self.errors.append(
                     f"keyset loop processed {self.loop_docs} of {self.n_orders}, "
@@ -161,15 +160,18 @@ class Ingest:
         return [s for s in self.tracer.spans
                 if s.attrs["phase"] == "measure" and "docs" in s.attrs]
 
+    def loop_times(self) -> list[float]:
+        """Seconds of each keyset loop that compacted under this tracer:
+        its etl_increment calls (under either tracer) plus compact_sink."""
+        return [c.attrs["loop_s"] for c in self.tracer.select("compact_sink")]
+
     def detail(self) -> dict:
         t = self.tracer
         pages_s = t.times("etl_increment", empty=False)
-        loops = [c.attrs["loop"] for c in t.select("compact_sink")]
         sink_bytes, sink_files = _dir_size(self.full)
         out = {
             "ingest_full_docs_per_s": self.n_docs / harness.median(t.times("etl_full")),
-            "ingest_increment_docs_per_s":
-                harness.median([n / s for n, s in loops]) if loops else None,
+            "ingest_increment_docs_per_s": self.n_orders / harness.median(self.loop_times()),
             "ingest_sink_bytes_per_doc": sink_bytes / self.n_docs,
             "ingest_sink_files": sink_files,
         }

@@ -19,11 +19,13 @@ on exit. One run:
    end-to-end metrics with ``--trace 0``, the per-layer metrics with
    ``--trace 1``.
 
-A traced run alternates whole units between tracing off and on;
-``trace.overhead_ratio`` is the untraced throughput over the traced one,
-and per-layer metrics come from the traced units only. spec.json documents
-the workloads, their input sizes and which end-to-end metric each layer
-metric should move.
+A traced run interleaves steps with tracing off and on (see ``_measure``);
+per-layer metrics come from the traced steps only, and
+``trace.overhead_ratio`` is the wall-clock time of the traced steps, the
+tracer's bookkeeping included, over that of the untraced ones. The metric
+names, units and directions are read from ``BENCHMARK.json`` at the
+checkout root; spec.json holds the workload sizes and documents what each
+metric means and which end-to-end metric each layer metric should move.
 """
 
 from __future__ import annotations
@@ -40,7 +42,8 @@ import traceback
 HERE = os.path.dirname(os.path.abspath(__file__))
 
 # Stage metrics folded per workload from the event log: (name, folded key,
-# scale). Reported per measured unit of work (iteration, request or pass).
+# scale). Reported per traced operation (``w.ops()``: an ingest cycle with
+# its curation pass, or a search request).
 _EXEC_METRICS = [
     ("exec.shuffle_read_bytes", "shuffle_read_bytes", 1.0),
     ("exec.shuffle_write_bytes", "shuffle_write_bytes", 1.0),
@@ -70,21 +73,28 @@ def _ready(w, tracers) -> bool:
     return ok
 
 
-def _measure(w, seconds: float, tracers) -> tuple[int, int, list[str]]:
-    """Run ``w.step()`` until ``seconds`` have passed and every tracer has
-    seen a whole unit, ending on a unit boundary. With two tracers (a traced
-    run) whole units alternate between them, so both see the same JVM
-    warm-up and box state. Stops regardless ``seconds`` (at least 60 s)
-    past the deadline, so failing calls cannot hold the run.
-    Returns (attempted, failed, tracebacks)."""
-    attempted = failed = turn = 0
+def _measure(w, seconds: float, tracers) -> tuple[int, int, list[str], list[float]]:
+    """Run ``w.step()`` until ``seconds`` have passed, the workload stands on
+    a unit boundary and every tracer has sampled every class.
+
+    With two tracers (a traced run) the step at ``w.position()`` == (unit,
+    k) runs under ``tracers[(unit + k) % 2]``: steps alternate between
+    tracing off and on, and the pattern flips each unit, so over a pair of
+    units each tracer runs every step of a unit once and both see the same
+    JVM warm-up and box state. A traced run therefore ends on an even unit.
+    Stops regardless ``seconds`` (at least 60 s) past the deadline, so
+    failing calls cannot hold the run.
+    Returns (attempted, failed, tracebacks, wall-clock seconds per tracer)."""
+    attempted = failed = 0
     errors: list[str] = []
+    wall = [0.0] * len(tracers)
     deadline = time.perf_counter() + seconds
     give_up = deadline + max(seconds, 60.0)
     while time.perf_counter() < give_up:
-        if w.at_boundary():
-            w.tracer = tracers[turn % len(tracers)]
-            turn += 1
+        unit, k = w.position()
+        i = (unit + k) % len(tracers)
+        w.tracer = tracers[i]
+        t0 = time.perf_counter()
         try:
             a, f = w.step()
             attempted += a
@@ -93,12 +103,15 @@ def _measure(w, seconds: float, tracers) -> tuple[int, int, list[str]]:
             attempted += 1
             failed += 1
             errors.append(traceback.format_exc(limit=3))
-        if time.perf_counter() >= deadline and _ready(w, tracers):
+        wall[i] += time.perf_counter() - t0
+        unit, k = w.position()
+        if (time.perf_counter() >= deadline and k == 0
+                and unit % len(tracers) == 0 and _ready(w, tracers)):
             break
-    return attempted, failed, errors
+    return attempted, failed, errors, wall
 
 
-def run(args, spec: dict, work: str) -> dict:
+def run(args, bench: dict, spec: dict, work: str) -> dict:
     import harness
 
     wspec = spec["workloads"][args.workload]
@@ -133,13 +146,10 @@ def run(args, spec: dict, work: str) -> dict:
                 untraced = harness.Tracer(spark, args.workload, enabled=False)
                 untraced.phase = "measure"
                 tracers = [untraced, tracer]
-            attempted, failed, errors = _measure(w, args.seconds, tracers)
+            attempted, failed, errors, wall = _measure(w, args.seconds, tracers)
             drift_after = harness.drift_probe(spark)
             record["drift"] = {"before": drift_before, "after": drift_after}
 
-            if args.trace:
-                w.tracer = untraced
-                untraced_e2e = w.end_to_end()
             w.tracer = tracer
             e2e = w.end_to_end()
             mismatches = w.check()
@@ -151,14 +161,14 @@ def run(args, spec: dict, work: str) -> dict:
     record["detail"] = e2e["detail"]
     record["detail"].update(error_rate=failed / attempted, peak_rss_mb=rss.peak_mb)
     metrics = dict(e2e["metrics"], setup_s=setup_s)
-    defs = spec["end_to_end"]
+    defs = bench["end_to_end"]
     if args.trace:
         folded = harness.fold_event_log(event_log)
         record["plans"] = tracer.plans
         record["folded"] = folded
-        metrics = layer_metrics(spec, w, folded, session_s, untraced_e2e, e2e)
+        defs = bench["per_layer"]
+        metrics = layer_metrics(defs, w, folded, session_s, wall)
         metrics["memory.peak_rss_mb"] = rss.peak_mb
-        defs = spec["per_layer"]
     record["result"] = {
         "correct": failed == 0, "attempted": attempted, "failed": failed,
         "metrics": {m["name"]: {"value": metrics[m["name"]], "unit": m["unit"]}
@@ -167,22 +177,22 @@ def run(args, spec: dict, work: str) -> dict:
     return record
 
 
-def layer_metrics(spec, w, folded, session_s, untraced, traced) -> dict:
-    """Every per-layer metric of spec.json; 0 for a layer the workload
-    does not call."""
-    out = {m["name"]: 0.0 for m in spec["per_layer"]}
+def layer_metrics(defs: list[dict], w, folded, session_s, wall) -> dict:
+    """Every per-layer metric of BENCHMARK.json; 0 for a layer the workload
+    does not call. ``w.tracer`` is the traced run's tracer."""
+    out = {m["name"]: 0.0 for m in defs}
     out.update(w.layers(folded))
-    unknown = set(out) - {m["name"] for m in spec["per_layer"]}
+    unknown = set(out) - {m["name"] for m in defs}
     if unknown:
-        raise KeyError(f"layer metrics missing from spec.json: {sorted(unknown)}")
+        raise KeyError(f"layer metrics missing from BENCHMARK.json: {sorted(unknown)}")
     out["session.get_spark_s"] = session_s
     mine = [g for k, g in folded.items()
             if k.startswith(w.name + ":") and k != w.name + ":setup"]
-    units = max(1, w.units())
+    ops = max(1, w.ops())
     for name, key, scale in _EXEC_METRICS:
-        out[name] = sum(g.get(key, 0.0) for g in mine) * scale / units
-    out["trace.overhead_ratio"] = (untraced["metrics"]["throughput_per_s"]
-                                   / traced["metrics"]["throughput_per_s"])
+        out[name] = sum(g.get(key, 0.0) for g in mine) * scale / ops
+    untraced_s, traced_s = wall
+    out["trace.overhead_ratio"] = traced_s / untraced_s
     return out
 
 
@@ -199,6 +209,8 @@ def main(argv: list[str] | None = None) -> int:
         print("perfbench: run from the root of a checkout holding the "
               "tweets_elastic_spark package", file=sys.stderr)
         return 2
+    with open(os.path.join(root, "BENCHMARK.json")) as f:
+        bench = json.load(f)
     with open(os.path.join(HERE, "spec.json")) as f:
         spec = json.load(f)
 
@@ -216,7 +228,7 @@ def main(argv: list[str] | None = None) -> int:
     tempfile.tempdir = work
     sys.path[:0] = [root, HERE]
     try:
-        record = run(args, spec, work)
+        record = run(args, bench, spec, work)
     finally:
         shutil.rmtree(work, ignore_errors=True)
         if not os.listdir(base):

@@ -10,16 +10,21 @@ request classes:
   ``context_annotations.domain.name``, range filters on ``author.*_count``
   with random thresholds and a nested exists on ``links.url``; top-k by
   score. Compiled by ``plans.search.from_es_json``, run by ``search``.
-* ``text`` (class b) — analyzed ``match``, ``multi_match`` and BM25
-  requests over ``documents`` through ``from_es_json`` with inline
-  analyzers and ``corpus_bm25_provider``. Query text is a pair of corpus
-  words; half the text requests repeat an earlier text, drawn Zipf-style,
-  so the analyzer and BM25 memo caches see a stated repeat share.
+* ``text`` — analyzed ``match``, ``multi_match`` and BM25 requests over
+  ``documents`` through ``from_es_json`` with inline analyzers and
+  ``corpus_bm25_provider``. Query text is a pair of corpus words. Half the
+  text requests carry a text the stream has not used before (``text_fresh``,
+  class b); the other half repeat an earlier text of the same template,
+  drawn Zipf-style (``text_repeat``, class d), which the analyzer and BM25
+  memo caches can answer. The two kinds are timed apart, so a memo change
+  shows on d alone and the assumed repeat share does not weight it.
 * ``agg`` (class c) — ``plans.aggs.es_request`` bodies with aggs over
   ``events`` and ``documents``, and ``plans.esql.esql`` STATS queries over
   ``events``.
 
 Each request's latency is the sum of its compile, build and action spans.
+The class mix and the repeat share are assumptions, not measured traffic;
+spec.json gives the reason for each.
 """
 
 from __future__ import annotations
@@ -39,7 +44,8 @@ from tweets_elastic_spark.plans.esql import esql
 from tweets_elastic_spark.plans.search import corpus_bm25_provider, from_es_json, search
 from tweets_elastic_spark.sources.catalog import fan_out, load_table
 
-CLASSES = ("nested", "text", "agg")
+# request kinds; a kind is a class of the end-to-end metrics
+KINDS = ("nested", "text_fresh", "agg", "text_repeat")
 TEXT_TEMPLATES = ("match", "multi_match", "bm25")
 AGG_TEMPLATES = ("events_terms", "docs_terms_top", "esql_stats")
 NESTED_PATHS = frozenset(PAGE_LOCAL_CHILDREN)
@@ -89,7 +95,8 @@ def make_stream(seed: int, spec: dict, n: int, warm_up: bool = False) -> list[di
     parameters are drawn from the seed. Each text template alternates a
     fresh query text with a repeat of one of its earlier texts, drawn
     Zipf-style (the k-th most recent with weight k^-zipf_s), so the memo
-    caches see a repeat share of exactly one half per epoch."""
+    caches see a repeat share of exactly one half per epoch. Each request
+    carries its ``kind``."""
     rng = np.random.default_rng([seed, 4])
     pools = _text_pools(rng)
     fresh = {t: iter(pools[-1][i::len(TEXT_TEMPLATES)] if warm_up else pools[i])
@@ -106,18 +113,21 @@ def make_stream(seed: int, spec: dict, n: int, warm_up: bool = False) -> list[di
                    "following_gt": int(rng.integers(0, 20))}
         elif cls == "text":
             seen = history[template]
-            if (i // len(ROTATION)) % 2 == 0 or warm_up:
-                q = next(fresh[template])
-            else:
+            repeat = (i // len(ROTATION)) % 2 == 1 and not warm_up
+            if repeat:
                 w = 1.0 / np.arange(1, len(seen) + 1) ** spec["zipf_s"]
                 q = seen[-1 - int(rng.choice(len(seen), p=w / w.sum()))]
+            else:
+                q = next(fresh[template])
             seen.append(q)
             req = {"q": q, "lang": str(rng.choice(langs)),
-                   "n_chars_gt": int(rng.integers(50, 400))}
+                   "n_chars_gt": int(rng.integers(50, 400)),
+                   "kind": "text_repeat" if repeat else "text_fresh"}
         else:
             req = {"value_gt": round(float(rng.uniform(0, 100)), 2),
                    "n_chars_gt": int(rng.integers(50, 400))}
         req["cls"] = cls
+        req.setdefault("kind", cls)
         if template is not None:
             req["template"] = template
         out.append(req)
@@ -222,7 +232,7 @@ class Search:
             self._run(r)
 
     def _run(self, r: dict) -> list:
-        cls, t = r["cls"], self.tracer
+        cls, kind, t = r["cls"], r["kind"], self.tracer
         if cls == "nested":
             with t.span("nested.from_es_json"):
                 q = from_es_json(nested_dsl(r), nested_paths=NESTED_PATHS)
@@ -230,7 +240,7 @@ class Search:
                 df = search(self.tweet_docs, q, k=K, tiebreak="id").select("id", "score")
         elif cls == "text":
             dsl = text_dsl(r)
-            with t.span("text.from_es_json"):
+            with t.span(f"{kind}.from_es_json"):
                 if r["template"] == "bm25":
                     q = from_es_json(dsl, analyzers={"text": "custom_shingles"},
                                      tokens_cols={"text": "text__custom_shingles"},
@@ -238,7 +248,7 @@ class Search:
                 else:
                     q = from_es_json(dsl, analyzers={
                         "text": "custom_shingles", "source": "standard"})
-            with t.span("text.search"):
+            with t.span(f"{kind}.search"):
                 src = self.docs_tok if r["template"] == "bm25" else self.docs
                 df = search(src, q, k=K, tiebreak="doc_id").select("doc_id", "score")
         elif r["template"] == "esql_stats":
@@ -248,10 +258,10 @@ class Search:
             src = self.events if r["template"] == "events_terms" else self.docs
             with t.span("agg.es_request"):
                 df = es_request(src, agg_body(r))
-        with t.span(f"{cls}.action"):
+        with t.span(f"{kind}.action"):
             rows = df.collect()
         if t.enabled and t.phase == "measure":
-            t.record_plan(f"{cls}.{r.get('template', 'reference')}", df)
+            t.record_plan(f"{kind}.{r.get('template', 'reference')}", df)
             t.spans[-1].attrs["phases"] = harness.planning_phases(df)
         return rows
 
@@ -261,7 +271,7 @@ class Search:
         first = len(self.tracer.spans)
         rows = self._run(r)
         for s in self.tracer.spans[first:]:
-            s.attrs["req"] = self.pos
+            s.attrs.update(req=self.pos, kind=r["kind"])
         self.done.append((r, [tuple(x) for x in rows]))
         return 1, 0
 
@@ -359,78 +369,76 @@ class Search:
     # -- metrics ------------------------------------------------------------
 
     def latencies(self) -> dict[str, list[float]]:
+        """Seconds of each measured request of this tracer, per kind."""
         per_req: dict[int, list] = {}
         for s in self.tracer.spans:
             if s.attrs.get("req") is not None and s.attrs["phase"] == "measure":
                 per_req.setdefault(s.attrs["req"], []).append(s)
-        out = {c: [] for c in CLASSES}
+        out = {k: [] for k in KINDS}
         for spans in per_req.values():
-            cls = spans[-1].name.split(".")[0]
-            out[cls].append(sum(s.seconds for s in spans))
+            out[spans[0].attrs["kind"]].append(sum(s.seconds for s in spans))
         return out
 
     def end_to_end(self) -> dict:
         lat = self.latencies()
         total_s = sum(sum(v) for v in lat.values())
         detail = {"search_qps": sum(len(v) for v in lat.values()) / total_s,
-                  "samples_ms": {c: [round(x * 1e3, 1) for x in v] for c, v in lat.items()}}
-        for c in CLASSES:
-            detail[f"search_{c}_p50_ms"] = harness.median(lat[c]) * 1e3
-            tl = harness.tail(lat[c])
+                  "samples_ms": {k: [round(x * 1e3, 1) for x in v] for k, v in lat.items()}}
+        for k in KINDS:
+            detail[f"search_{k}_p50_ms"] = harness.median(lat[k]) * 1e3
+            tl = harness.tail(lat[k])
             if tl is not None:
-                detail[f"search_{c}_tail_ms"] = tl[0] * 1e3
-                detail[f"search_{c}_tail_percentile"] = tl[1]
-        metrics = {
-            "throughput_per_s": detail["search_qps"],
-            "a_p50_ms": detail["search_nested_p50_ms"],
-            "b_p50_ms": detail["search_text_p50_ms"],
-            "c_p50_ms": detail["search_agg_p50_ms"],
-        }
+                detail[f"search_{k}_tail_ms"] = tl[0] * 1e3
+                detail[f"search_{k}_tail_percentile"] = tl[1]
+        metrics = {"throughput_per_s": detail["search_qps"]}
+        for letter, k in zip("abcd", KINDS):
+            metrics[f"{letter}_p50_ms"] = detail[f"search_{k}_p50_ms"]
         return {"metrics": metrics, "detail": detail}
 
-    def at_boundary(self) -> bool:
-        """The next request starts an epoch."""
-        return self.pos % EPOCH == 0
+    def position(self) -> tuple[int, int]:
+        """(whole epochs run, requests run in the current epoch)."""
+        return divmod(self.pos, EPOCH)
 
     def ready(self) -> bool:
-        return self.at_boundary() and all(self.latencies().values())
+        return all(self.latencies().values())
 
-    def units(self) -> int:
+    def ops(self) -> int:
         return sum(len(v) for v in self.latencies().values())
 
     def layers(self, folded: dict) -> dict:
         t = self.tracer
-        n = {c: max(1, len(v)) for c, v in self.latencies().items()}
+        n = {k: max(1, len(v)) for k, v in self.latencies().items()}
         out = {}
 
         def p50_ms(name: str) -> float:
             v = t.times(name)
             return harness.median(v) * 1e3 if v else 0.0
 
-        for c in ("nested", "text"):
-            out[f"plans.search.from_es_json_ms.{c}"] = p50_ms(f"{c}.from_es_json")
-            out[f"plans.search.search_build_ms.{c}"] = p50_ms(f"{c}.search")
+        for k in ("nested", "text_fresh", "text_repeat"):
+            out[f"plans.search.from_es_json_ms.{k}"] = p50_ms(f"{k}.from_es_json")
+            out[f"plans.search.search_build_ms.{k}"] = p50_ms(f"{k}.search")
         out["plans.aggs.es_request_build_ms"] = p50_ms("agg.es_request")
         out["plans.esql.compile_ms"] = p50_ms("agg.esql")
-        for c in CLASSES:
-            build = [s for s in t.spans if s.name.startswith(c + ".")
-                     and not s.name.endswith(".action") and s.attrs.get("req")]
-            actions = t.select(f"{c}.action")
-            actions = [s for s in actions if s.attrs.get("req")]
-            out[f"plans.construct_jobs_per_request.{c}"] = sum(s.jobs for s in build) / n[c]
-            out[f"exec.action_ms.{c}"] = p50_ms(f"{c}.action")
-            out[f"exec.jobs_per_request.{c}"] = sum(s.jobs for s in actions) / n[c]
-            out[f"exec.tasks_per_request.{c}"] = sum(
-                g.get("tasks", 0) for k, g in folded.items()
-                if k.startswith(f"search:{c}.")) / n[c]
+        for k in KINDS:
+            mine = [s for s in t.spans if s.attrs.get("req") and s.attrs["kind"] == k
+                    and s.attrs["phase"] == "measure"]
+            build = [s for s in mine if not s.name.endswith(".action")]
+            actions = [s for s in mine if s.name.endswith(".action")]
+            out[f"plans.construct_jobs_per_request.{k}"] = sum(s.jobs for s in build) / n[k]
+            out[f"exec.action_ms.{k}"] = p50_ms(f"{k}.action")
+            out[f"exec.jobs_per_request.{k}"] = sum(s.jobs for s in actions) / n[k]
+            out[f"exec.tasks_per_request.{k}"] = sum(
+                g.get("tasks", 0) for name, g in folded.items()
+                if name.startswith(f"search:{k}.")) / n[k]
             for ph in ("analysis", "optimization", "planning"):
                 # the tracker reports whole ms, so a median would repeat
                 # exactly across runs; the mean keeps the spread visible
                 v = [s.attrs["phases"][ph] for s in actions if "phases" in s.attrs]
-                out[f"catalyst.{ph}_ms.{c}"] = sum(v) / len(v) if v else 0.0
-        text_py = sum(g.get("python_worker_ms", 0.0) for k, g in folded.items()
-                      if k.startswith("search:text."))
-        out["functions.analyzers.python_worker_ms_per_request"] = text_py / n["text"]
+                out[f"catalyst.{ph}_ms.{k}"] = sum(v) / len(v) if v else 0.0
+        text_py = sum(g.get("python_worker_ms", 0.0) for name, g in folded.items()
+                      if name.startswith("search:text_"))
+        out["functions.analyzers.python_worker_ms_per_request"] = text_py / (
+            n["text_fresh"] + n["text_repeat"])
         out["functions.analyzers.repeat_query_share"] = repeat_share(
             self.stream[:self.pos])
         return out
