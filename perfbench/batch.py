@@ -28,6 +28,7 @@ class Batch:
         self.curate = Curate(spark, tracer, work, seed, spec["curate"])
         self.curate_next = False  # a keyset loop just compacted
         self.cycles = self.k = 0  # whole cycles run, steps into this one
+        self.warm_up_cycles = spec["warm_up_cycles"]
         self.tracer = tracer
 
     @property
@@ -49,8 +50,15 @@ class Batch:
         self.curate.prepare()
 
     def warm_up(self) -> None:
-        self.ingest.warm_up()
-        self.curate.warm_up()
+        """``warm_up_cycles`` whole cycles of the measured calls. The JVM
+        keeps speeding up over the first cycles (about 30% from the first
+        to the third), so timing only after them keeps runs comparable."""
+        self.ingest.start()
+        for _ in range(self.warm_up_cycles):
+            self.step()
+            while self.k:
+                self.step()
+        self.cycles = 0
 
     def step(self) -> tuple[int, int]:
         self.k += 1

@@ -56,16 +56,12 @@ class Curate:
         self.docs = load_table(self.spark, self.data, "documents")
         self.n_docs = self.docs.count()
 
-    def warm_up(self) -> None:
-        """One pass over the first ``warm_up_documents`` documents."""
-        self._pass(self.docs.filter(F.col("doc_id") < self.spec["warm_up_documents"]))
-
-    def _pass(self, docs=None) -> None:
+    def _pass(self) -> None:
         t = self.tracer
         with t.span("gates_dedup_exact"):
             text = F.col("text")
             clean = (
-                (self.docs if docs is None else docs).filter(T.lang_id(text) == "en")
+                self.docs.filter(T.lang_id(text) == "en")
                 .filter(T.quality_score(text) >= 0.35)
                 .filter(T.token_count(text) >= 10)
                 .select("doc_id", "text")

@@ -133,8 +133,9 @@ def start_session(work_dir: str, cpus: int, heap: str, event_log_dir: str | None
         "spark.driver.memory": heap,
         "spark.local.dir": os.path.join(work_dir, "spark-local"),
         "spark.sql.warehouse.dir": os.path.join(work_dir, "warehouse"),
-        # no hsperfdata file under the system /tmp
-        "spark.driver.extraJavaOptions": f"-XX:-UsePerfData -Djava.io.tmpdir={work_dir} "
+        # no hsperfdata file under the system /tmp; the heap starts at its
+        # full size, so no measured call pays for growing it
+        "spark.driver.extraJavaOptions": f"-XX:-UsePerfData -Xms{heap} -Djava.io.tmpdir={work_dir} "
                                          f"-Dderby.system.home={work_dir}",
     }
     if event_log_dir is not None:

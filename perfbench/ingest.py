@@ -55,7 +55,7 @@ class Ingest:
         self.full = os.path.join(work, "full_sink")
         self.inc = os.path.join(work, "inc_sink")
         self.compacted = os.path.join(work, "compacted_sink")
-        self.n_docs = 0
+        self.n_docs: int | None = None  # set by the first etl_full call
         self.next_call = "etl_full"
         self.errors: list[str] = []  # mismatches seen while measuring
 
@@ -72,15 +72,9 @@ class Ingest:
         star, its spine counted."""
         self.n_source = load_tweet_tables(self.spark, self.star)["conversations"].count()
 
-    def warm_up(self) -> None:
-        """Each call once: etl_full, a one-page keyset loop, compaction."""
-        self.n_docs = etl_full(self.spark, self.star, self.full)
+    def start(self) -> None:
+        """Ready the first keyset loop."""
         self._restart_loop()
-        while etl_increment(self.spark, self.star, self.inc, self.store,
-                            page_limit=self.n_orders):
-            pass
-        compact_sink(self.spark, self.inc)
-        self._keep_compacted()
 
     def _keep_compacted(self) -> None:
         """Move the compacted increments aside for check() and start over."""
@@ -107,7 +101,9 @@ class Ingest:
             with t.span("etl_full") as sp:
                 n = etl_full(self.spark, self.star, self.full)
             sp.attrs["docs"] = n
-            if n != self.n_docs:
+            if self.n_docs is None:
+                self.n_docs = n
+            elif n != self.n_docs:
                 self.errors.append(f"etl_full wrote {n} docs, earlier {self.n_docs}")
             self.next_call = "etl_increment" if call == "etl_full" else "etl_full"
         elif call == "etl_increment":

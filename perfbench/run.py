@@ -12,8 +12,8 @@ on exit. One run:
    up ``setup_repeats`` times and warms it up (``setup_s`` = session start
    + derivation + median set-up + warm-up);
 3. measures whole units of work (an ingest cycle with its curation pass,
-   an 18-request search epoch) until ``--seconds`` have passed, bracketed
-   by a box-drift probe;
+   an 18-request search epoch) until ``--seconds`` have passed and at least
+   the workload's ``min_units`` have run, bracketed by a box-drift probe;
 4. checks the outputs against DuckDB;
 5. prints a detail record, then as the last line the result: the
    end-to-end metrics with ``--trace 0``, the per-layer metrics with
@@ -73,9 +73,11 @@ def _ready(w, tracers) -> bool:
     return ok
 
 
-def _measure(w, seconds: float, tracers) -> tuple[int, int, list[str], list[float]]:
+def _measure(w, seconds: float, min_units: int,
+             tracers) -> tuple[int, int, list[str], list[float]]:
     """Run ``w.step()`` until ``seconds`` have passed, the workload stands on
-    a unit boundary and every tracer has sampled every class.
+    a unit boundary past its first ``min_units`` units and every tracer has
+    sampled every class.
 
     With two tracers (a traced run) the step at ``w.position()`` == (unit,
     k) runs under ``tracers[(unit + k) % 2]``: steps alternate between
@@ -106,7 +108,8 @@ def _measure(w, seconds: float, tracers) -> tuple[int, int, list[str], list[floa
         wall[i] += time.perf_counter() - t0
         unit, k = w.position()
         if (time.perf_counter() >= deadline and k == 0
-                and unit % len(tracers) == 0 and _ready(w, tracers)):
+                and unit >= min_units and unit % len(tracers) == 0
+                and _ready(w, tracers)):
             break
     return attempted, failed, errors, wall
 
@@ -146,7 +149,8 @@ def run(args, bench: dict, spec: dict, work: str) -> dict:
                 untraced = harness.Tracer(spark, args.workload, enabled=False)
                 untraced.phase = "measure"
                 tracers = [untraced, tracer]
-            attempted, failed, errors, wall = _measure(w, args.seconds, tracers)
+            attempted, failed, errors, wall = _measure(
+                w, args.seconds, wspec["min_units"], tracers)
             drift_after = harness.drift_probe(spark)
             record["drift"] = {"before": drift_before, "after": drift_after}
 
