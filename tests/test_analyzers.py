@@ -4,6 +4,12 @@ primitives, including the edge cases called out in SURVEY §7."""
 
 from __future__ import annotations
 
+import sys
+import threading
+import time
+import uuid
+from collections import OrderedDict
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -146,6 +152,118 @@ def test_keyword_lowercase_pipeline(spark):
 
 def test_analyze_text_query_time(spark):
     assert A.analyze_text(spark, "The Persons", "englando") == ["person"]
+
+
+# -- query-time literal path vs the column path ------------------------------
+
+PARITY_INPUTS = [
+    "Wilbur Soot plays Minecraft",
+    "the THE of running runs",
+    "<p>Tom &amp; Jerry&#39;s &lt;show&gt;&nbsp;now</p>",
+    "The fiancé's tweets’s Persons' running",
+    "naïve straße ﬁne ½ Ærø",
+    "𝐀𝐁 math bold",
+    "東京 タワー 中文",
+    "",
+    "   ",
+]
+
+
+@pytest.fixture(scope="module")
+def column_path_tokens(spark):
+    """The reference: every analyzer over every input through
+    ``analyze`` on a DataFrame column (the pandas UDFs included)."""
+    df = spark.createDataFrame(list(enumerate(PARITY_INPUTS)), "i int, t string")
+    rows = df.select(
+        "i", *[A.analyze(F.col("t"), name).alias(name) for name in A.ANALYZERS]
+    ).collect()
+    return {
+        (name, PARITY_INPUTS[r["i"]]): list(r[name])
+        for r in rows for name in A.ANALYZERS
+    }
+
+
+@pytest.mark.parametrize("text", PARITY_INPUTS)
+@pytest.mark.parametrize("name", list(A.ANALYZERS))
+def test_analyze_text_matches_column_path(spark, column_path_tokens, name, text):
+    A._ANALYZE_TEXT_CACHE.pop((text, name), None)
+    assert A.analyze_text(spark, text, name) == column_path_tokens[(name, text)]
+
+
+@pytest.mark.parametrize("name", ["custom_shingles", "englando"])
+def test_analyze_text_scalar_query_value(spark, name):
+    # DSL JSON may carry a number as the match query
+    assert A.analyze_text(spark, 42, name) == A.analyze_text(spark, "42", name)
+
+
+def test_analyze_text_launches_no_job(spark):
+    sc = spark.sparkContext
+    group = f"analyze-text-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "query-time analysis of never-seen texts")
+    try:
+        for name in A.ANALYZERS:
+            A.analyze_text(spark, f"fresh {group}", name)
+            A.analyze_text(spark, f"naïve {group}", name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_analyze_text_cache_is_a_bounded_lru(spark, monkeypatch):
+    monkeypatch.setattr(A, "_ANALYZE_TEXT_CACHE_SIZE", 2)
+    monkeypatch.setattr(A, "_ANALYZE_TEXT_CACHE", OrderedDict())
+    for text in ("one", "two", "one", "three"):
+        A.analyze_text(spark, text, "standard")
+    # "two" was least recently used when "three" arrived
+    assert list(A._ANALYZE_TEXT_CACHE) == [("one", "standard"), ("three", "standard")]
+    got = A.analyze_text(spark, "one", "standard")
+    got.append("mutated")
+    assert A.analyze_text(spark, "one", "standard") == ["one"]
+
+
+class _YieldingDict(OrderedDict):
+    """Yields the interpreter after each lookup and store, so threads
+    interleave inside any unsynchronized check-then-act on the cache."""
+
+    def get(self, key, default=None):
+        out = super().get(key, default)
+        time.sleep(0)
+        return out
+
+    def __setitem__(self, key, value):
+        super().__setitem__(key, value)
+        time.sleep(0)
+
+
+def test_analyze_text_cache_under_concurrent_callers(spark, monkeypatch):
+    # hits and evictions interleave across threads; a lost update shows as
+    # a KeyError from move_to_end or a cache past its bound
+    monkeypatch.setattr(A, "_ANALYZE_TEXT_CACHE_SIZE", 3)
+    monkeypatch.setattr(A, "_ANALYZE_TEXT_CACHE", _YieldingDict())
+    monkeypatch.setattr(A, "_evaluate_literal", lambda spark, value, steps: value.split())
+    errors = []
+
+    def caller(seed):
+        try:
+            for i in range(500):
+                text = f"t{(seed * 7 + i) % 5}"
+                assert A.analyze_text(spark, text, "standard") == [text]
+        except Exception as e:  # noqa: BLE001 — reported to the main thread
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=caller, args=(k,)) for k in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(A._ANALYZE_TEXT_CACHE) <= 3
 
 
 def test_materialize_tokens_multifield(spark):

@@ -4,6 +4,8 @@ approximate variants (MinHash-LSH, SimHash, ANN) vs their exact baselines
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -507,3 +509,19 @@ def test_dedup_increment_near_drops_corpus_neighbors(spark):
                  dedup_increment_near(inc, corpus,
                                       est_threshold=0.35).collect())
     assert got == [11]
+
+
+@pytest.mark.parametrize("max_iter", [0, -1])
+def test_connected_components_rejects_max_iter_below_one(spark, max_iter):
+    pairs = spark.range(3).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    sc = spark.sparkContext
+    group = f"cc-max-iter-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "connected_components argument check")
+    try:
+        with pytest.raises(ValueError, match="max_iter"):
+            D.connected_components(pairs, max_iter=max_iter)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []

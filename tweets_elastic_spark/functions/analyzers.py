@@ -3,21 +3,31 @@
 The reference declares four custom Elasticsearch analyzers
 (/root/reference/src/config/settings.json:8-45) bound to text fields in the
 index mapping; analysis happens at index time (per-document) and at query
-time (per query string). Here each Lucene primitive (T1-T10) is a
-``Column -> Column`` function and each analyzer (AN1-AN4) a named
-composition, applied either to a DataFrame column (index-time analogue,
-``materialize_tokens``) or to a literal query string (query-time analogue,
-``analyze_text``).
+time (per query string). Here each Lucene primitive (T1-T10) is an
+analyzer step and each analyzer (AN1-AN4, plus ES's built-in standard and
+fingerprint) ONE ordered list of steps in ``ANALYZERS``. The same list
+serves both times:
 
-JVM-side built-ins everywhere possible (whole-stage codegen); Python appears
-only in the two genuinely-custom primitives — asciifolding and Porter
-stemming — as Arrow-batched Pandas UDFs (SURVEY §2.10), never row-at-a-time.
-Char n-grams and shingles are pure SQL higher-order expressions.
+* index time — ``analyze`` composes it over a DataFrame column
+  (``materialize_tokens``);
+* query time — ``analyze_text`` evaluates it over one literal string on
+  the driver: JVM steps as a projection Catalyst folds into a local
+  relation, Python steps in-process. No Spark job, no Python worker.
+
+Steps are JVM-side built-ins everywhere possible (whole-stage codegen);
+Python appears only in the two genuinely-custom primitives — asciifolding
+and Porter stemming — as ``TokenMap`` steps: one per-token function, run
+in Arrow-batched Pandas UDFs on columns (SURVEY §2.10), never
+row-at-a-time. Char n-grams and shingles are pure SQL higher-order
+expressions.
 """
 
 from __future__ import annotations
 
+import threading
 import unicodedata
+from collections import OrderedDict
+from typing import Callable
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -68,9 +78,39 @@ def lowercase(toks: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# T5: asciifolding (settings.json:26,36) — custom UDF item. NFKD-decompose,
-# strip combining marks, plus the Latin ligature/special-letter foldings
-# NFKD doesn't cover (subset of Lucene's table; divergence documented).
+# Per-token Python maps (T5, T8). Each is ONE per-token function; the
+# column path runs it inside an Arrow-batched pandas UDF (SURVEY §2.10),
+# the literal path (``analyze_text``) calls it in-process.
+# ---------------------------------------------------------------------------
+
+class TokenMap:
+    """An analyzer step that maps every token through a Python function.
+
+    Called on a Column it applies ``fn`` through a pandas UDF named
+    ``name`` (built once, so repeated uses stay CSE-able). ``analyze_text``
+    calls ``fn`` directly. ``ascii_identity`` declares that ``fn`` maps
+    every ASCII token to itself; since every JVM step here maps ASCII
+    text to ASCII tokens, ``analyze_text`` skips such a step for an ASCII
+    query string."""
+
+    def __init__(self, name: str, fn: Callable[[str], str], ascii_identity: bool = False):
+        self.fn = fn
+        self.ascii_identity = ascii_identity
+
+        def per_batch(batch: pd.Series) -> pd.Series:
+            return batch.map(lambda toks: None if toks is None else [fn(t) for t in toks])
+
+        per_batch.__name__ = per_batch.__qualname__ = name
+        self._udf = F.pandas_udf(per_batch, ArrayType(StringType()))
+
+    def __call__(self, toks: Column) -> Column:
+        return self._udf(toks)
+
+
+# ---------------------------------------------------------------------------
+# T5: asciifolding (settings.json:26,36). NFKD-decompose, strip combining
+# marks, plus the Latin ligature/special-letter foldings NFKD doesn't cover
+# (subset of Lucene's table; divergence documented).
 # ---------------------------------------------------------------------------
 
 _FOLD_TABLE = str.maketrans({
@@ -81,28 +121,20 @@ _FOLD_TABLE = str.maketrans({
 
 
 def _fold_one(t: str) -> str:
+    # ASCII fast path (guide §4.2 — make the per-batch work cheap): an
+    # all-ASCII token has no combining marks, NFKD is the identity, and
+    # every _FOLD_TABLE key is non-ASCII — folding is a no-op. str.isascii
+    # is a single C scan, vs NFKD + a join per token; real corpora are
+    # overwhelmingly ASCII tokens.
+    if t.isascii():
+        return t
     t = t.translate(_FOLD_TABLE)
     return "".join(
         ch for ch in unicodedata.normalize("NFKD", t) if not unicodedata.combining(ch)
     )
 
 
-@F.pandas_udf(ArrayType(StringType()))
-def _asciifold_udf(batch: pd.Series) -> pd.Series:
-    # ASCII fast path (guide §4.2 — make the per-batch work cheap): an
-    # all-ASCII token has no combining marks, NFKD is the identity, and
-    # every _FOLD_TABLE key is non-ASCII — folding is a no-op. str.isascii
-    # is a single C scan, vs NFKD + a join per token; real corpora are
-    # overwhelmingly ASCII tokens, so this removes most of the Python cost
-    # of the analyzer chain's one unavoidable UDF.
-    return batch.map(
-        lambda toks: None if toks is None
-        else [t if t.isascii() else _fold_one(t) for t in toks]
-    )
-
-
-def asciifold(toks: Column) -> Column:
-    return _asciifold_udf(toks)
+asciifold = TokenMap("_asciifold_udf", _fold_one, ascii_identity=True)
 
 
 # T6: english_possessive_stemmer (settings.json:56-59) — strip 's / ’s.
@@ -130,39 +162,24 @@ def english_stop(toks: Column) -> Column:
 
 # ---------------------------------------------------------------------------
 # T8: english_stemmer (settings.json:64-67) — Porter, custom UDF item.
-# Memoized per Arrow batch: corpus vocabulary is tiny relative to tokens.
 # ---------------------------------------------------------------------------
 
-# Memo shared across batches AND tasks: the UDF lives in an importable
-# module, so a reused Python worker (spark.python.worker.reuse, default
-# on) keeps the module global across tasks (guide §4.5) — the per-batch
-# dict it replaces re-stemmed the whole vocabulary for every Arrow batch.
-# Pure-function cache, bounded by corpus vocabulary; never grows past a
-# few hundred k entries on real text.
+# Memo shared across batches AND tasks: ``_stem_one`` is a module function,
+# so the UDF pickles it by reference and a reused Python worker
+# (spark.python.worker.reuse, default on) keeps this module global across
+# tasks (guide §4.5). Pure-function cache, bounded by corpus vocabulary;
+# never grows past a few hundred k entries on real text.
 _PORTER_CACHE: dict[str, str] = {}
 
 
-@F.pandas_udf(ArrayType(StringType()))
-def _porter_udf(batch: pd.Series) -> pd.Series:
-    cache = _PORTER_CACHE
-
-    def stem_all(toks):
-        if toks is None:
-            return None
-        out = []
-        for t in toks:
-            s = cache.get(t)
-            if s is None:
-                s = porter_stem(t)
-                cache[t] = s
-            out.append(s)
-        return out
-
-    return batch.map(stem_all)
+def _stem_one(t: str) -> str:
+    s = _PORTER_CACHE.get(t)
+    if s is None:
+        s = _PORTER_CACHE[t] = porter_stem(t)
+    return s
 
 
-def porter_stem_tokens(toks: Column) -> Column:
-    return _porter_udf(toks)
+porter_stem_tokens = TokenMap("_porter_udf", _stem_one)
 
 
 # ---------------------------------------------------------------------------
@@ -221,35 +238,6 @@ def shingles(toks: Column) -> Column:
     return F.concat(toks, bigrams)
 
 
-# ---------------------------------------------------------------------------
-# Composed analyzers AN1-AN4 (settings.json:8-45); filter order mirrors the
-# ES definitions exactly.
-# ---------------------------------------------------------------------------
-
-def analyzer_englando(c: Column) -> Column:
-    """html_strip → standard → possessive → lowercase → stop → Porter
-    (settings.json:9-19)."""
-    toks = standard_tokenize(html_strip(c))
-    toks = possessive_stem(toks)
-    toks = lowercase(toks)
-    toks = english_stop(toks)
-    return porter_stem_tokens(toks)
-
-
-def analyzer_custom_ngram(c: Column) -> Column:
-    """html_strip → standard → lowercase → asciifolding → ngram(1,10)
-    (settings.json:20-29)."""
-    toks = lowercase(standard_tokenize(html_strip(c)))
-    return char_ngrams(asciifold(toks), 1, 10)
-
-
-def analyzer_custom_shingles(c: Column) -> Column:
-    """html_strip → standard → lowercase → asciifolding → shingles
-    (settings.json:30-39)."""
-    toks = lowercase(standard_tokenize(html_strip(c)))
-    return shingles(asciifold(toks))
-
-
 def trim_tokens(toks: Column) -> Column:
     """ES ``trim`` token filter: strip leading/trailing whitespace from
     each token (tokens that become empty stay — ES's behavior; chain
@@ -286,37 +274,36 @@ def fingerprint_filter(toks: Column) -> Column:
     ).otherwise(F.array(joined))
 
 
-def analyzer_fingerprint(c: Column) -> Column:
-    """ES's BUILT-IN ``fingerprint`` analyzer: standard tokenizer →
-    lowercase → asciifolding → fingerprint filter (no stopwords by
-    default). One token out: the sorted-deduped-space-joined normal
-    form — equal fingerprints mean same word multiset, the classic
-    near-dup clustering key."""
-    return fingerprint_filter(asciifold(lowercase(standard_tokenize(c))))
+# ---------------------------------------------------------------------------
+# Composed analyzers (settings.json:8-45 plus ES's built-in standard and
+# fingerprint): ONE ordered step list per analyzer, filter order mirroring
+# the ES definitions exactly. A step is a JVM ``Column -> Column`` function
+# or a ``TokenMap``; ``analyze`` composes a list over a column,
+# ``analyze_text`` evaluates the same list over one literal string.
+# ---------------------------------------------------------------------------
 
-
-def analyzer_standard(c: Column) -> Column:
-    """ES's BUILT-IN ``standard`` analyzer (standard tokenizer + lowercase,
-    no char filters) — the default every text field gets when the mapping
-    names no custom analyzer. Added for the query-DSL front-end's
-    match_phrase support: phrase positions are defined over plain word
-    tokens, not shingled/ngrammed streams."""
-    return lowercase(standard_tokenize(c))
-
-
-def analyzer_keyword_lowercase(c: Column) -> Column:
-    """keyword → lowercase (settings.json:40-44): hashtags match
-    case-insensitively as a single unit (docs/protokol.md:304)."""
-    return lowercase(keyword_tokenize(c))
-
-
-ANALYZERS = {
-    "englando": analyzer_englando,
-    "custom_ngram": analyzer_custom_ngram,
-    "custom_shingles": analyzer_custom_shingles,
-    "keyword_lowercase": analyzer_keyword_lowercase,
-    "standard": analyzer_standard,
-    "fingerprint": analyzer_fingerprint,
+ANALYZERS: dict[str, list[Callable[[Column], Column]]] = {
+    # AN1, settings.json:9-19 — no asciifolding: "fïancé" keeps its marks
+    "englando": [html_strip, standard_tokenize, possessive_stem, lowercase,
+                 english_stop, porter_stem_tokens],
+    # AN2, settings.json:20-29 — ngram(1,10)
+    "custom_ngram": [html_strip, standard_tokenize, lowercase, asciifold,
+                     char_ngrams],
+    # AN3, settings.json:30-39
+    "custom_shingles": [html_strip, standard_tokenize, lowercase, asciifold,
+                        shingles],
+    # AN4, settings.json:40-44 — hashtags match case-insensitively as a
+    # single unit (docs/protokol.md:304)
+    "keyword_lowercase": [keyword_tokenize, lowercase],
+    # ES's built-in default for a text field with no custom analyzer; the
+    # query-DSL front-end's match_phrase positions are over these plain
+    # word tokens, not shingled/ngrammed streams
+    "standard": [standard_tokenize, lowercase],
+    # ES's built-in fingerprint analyzer (no stopwords by default): one
+    # token out, the sorted-deduped-space-joined normal form — equal
+    # fingerprints mean the same word multiset, the near-dup clustering key
+    "fingerprint": [standard_tokenize, lowercase, asciifold,
+                    fingerprint_filter],
 }
 
 
@@ -324,23 +311,94 @@ def analyze(c: Column | str, analyzer: str) -> Column:
     """Index-time analysis: column → array<string> of tokens."""
     if isinstance(c, str):
         c = F.col(c)
-    return ANALYZERS[analyzer](c)
+    for step in ANALYZERS[analyzer]:
+        c = step(c)
+    return c
 
 
-_ANALYZE_TEXT_CACHE: dict[tuple[str, str], list[str]] = {}
+def analyzer_englando(c: Column) -> Column:
+    return analyze(c, "englando")
+
+
+def analyzer_custom_ngram(c: Column) -> Column:
+    return analyze(c, "custom_ngram")
+
+
+def analyzer_custom_shingles(c: Column) -> Column:
+    return analyze(c, "custom_shingles")
+
+
+def analyzer_keyword_lowercase(c: Column) -> Column:
+    return analyze(c, "keyword_lowercase")
+
+
+def analyzer_standard(c: Column) -> Column:
+    return analyze(c, "standard")
+
+
+def analyzer_fingerprint(c: Column) -> Column:
+    return analyze(c, "fingerprint")
+
+
+# Query-text memo, an LRU behind a lock (query trees may be built from
+# several threads). The size is far above the ~220 distinct (text,
+# analyzer) pairs of a 1 000-request search stream.
+_ANALYZE_TEXT_CACHE_SIZE = 4096
+_ANALYZE_TEXT_CACHE: OrderedDict[tuple[str, str], tuple[str, ...]] = OrderedDict()
+_ANALYZE_TEXT_LOCK = threading.Lock()
+
+
+def _evaluate_literal(spark, value, steps: list) -> list[str]:
+    """Evaluate JVM ``steps`` over one literal: a projection over a one-row
+    inline table, which ConvertToLocalRelation folds into a LocalRelation,
+    so ``collect`` runs on the driver and launches no job."""
+    # an empty token list binds as array<void>; the cast restores the type
+    c = F.col("x").cast("array<string>") if isinstance(value, list) else F.col("x")
+    for step in steps:
+        c = step(c)
+    rows = spark.sql(
+        "SELECT * FROM VALUES (:v) AS v(x)", args={"v": value}
+    ).select(c).collect()
+    return list(rows[0][0])
 
 
 def analyze_text(spark, text: str, analyzer: str) -> list[str]:
     """Query-time analysis of one string (ES analyzes the query with the
-    target field's analyzer before matching, SURVEY §2.7 Q5). Memoized:
-    analyzers are pure functions of the literal, and a query tree may ask
-    for the same analysis several times (predicate + score) — each miss
-    costs a 1-row Spark job."""
+    target field's analyzer before matching, SURVEY §2.7 Q5).
+
+    Runs the analyzer's step list on the driver with no Spark job and no
+    Python worker: each maximal run of JVM steps is one
+    ``_evaluate_literal`` and each ``TokenMap`` calls its function
+    in-process (skipped for an ASCII string when it is the identity on
+    ASCII tokens). Memoized in an LRU of ``_ANALYZE_TEXT_CACHE_SIZE``
+    entries — a query tree may ask for the same analysis several times
+    (predicate + score); callers get a fresh list."""
     key = (text, analyzer)
-    if key not in _ANALYZE_TEXT_CACHE:
-        row = spark.range(1).select(analyze(F.lit(text), analyzer).alias("t")).head()
-        _ANALYZE_TEXT_CACHE[key] = list(row["t"])
-    return list(_ANALYZE_TEXT_CACHE[key])
+    with _ANALYZE_TEXT_LOCK:
+        hit = _ANALYZE_TEXT_CACHE.get(key)
+        if hit is not None:
+            _ANALYZE_TEXT_CACHE.move_to_end(key)
+            return list(hit)
+    # a scalar query value from DSL JSON (``{"match": {"f": 42}}``) is
+    # analyzed as its string form, as the column path's implicit cast does
+    ascii_text = str(text).isascii()
+    value = text
+    jvm_steps: list = []
+    for step in ANALYZERS[analyzer]:
+        if not isinstance(step, TokenMap):
+            jvm_steps.append(step)
+        elif not (step.ascii_identity and ascii_text):
+            if jvm_steps:
+                value = _evaluate_literal(spark, value, jvm_steps)
+                jvm_steps = []
+            value = [step.fn(t) for t in value]
+    tokens = tuple(_evaluate_literal(spark, value, jvm_steps) if jvm_steps else value)
+    with _ANALYZE_TEXT_LOCK:
+        _ANALYZE_TEXT_CACHE[key] = tokens
+        _ANALYZE_TEXT_CACHE.move_to_end(key)
+        while len(_ANALYZE_TEXT_CACHE) > _ANALYZE_TEXT_CACHE_SIZE:
+            _ANALYZE_TEXT_CACHE.popitem(last=False)
+    return list(tokens)
 
 
 def pin_computed(c: Column) -> Column:

@@ -123,6 +123,8 @@ def connected_components(
     most recent call — a test hook for the O(log d) round bound; it plays
     no part in the result."""
     global CC_LAST_ROUNDS
+    if max_iter < 1:
+        raise ValueError(f"connected_components: max_iter must be >= 1, got {max_iter}")
     edges = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     edges = edges.unionAll(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
